@@ -20,8 +20,8 @@ makes the NumPy replica test exact instead of allclose-fuzzy.
 
 from __future__ import annotations
 
+import logging
 import os
-import sys
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..sources.catalog import load_table
+
+log = logging.getLogger(__name__)
 
 DAMPING = 0.85
 N_ITERATIONS = 8
@@ -63,10 +65,10 @@ def _lineitem_row_count(sf_dir: str) -> int | None:
             for f in pq.ParquetDataset(path).files
         )
     except (OSError, KeyError, pyarrow.ArrowInvalid) as exc:
-        print(
-            f"[graph] footer stats probe failed ({exc!r}); "
+        log.warning(
+            "footer stats probe failed (%r); "
             "keeping session shuffle partitioning",
-            file=sys.stderr,
+            exc,
         )
         return None
 

@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.numeric import disc_price_dec, exact_avg, exact_sum
-from ..session import default_parallelism
+from ..session import default_parallelism, local_frame
 from ..sources.catalog import load_table
 
 
@@ -383,7 +383,8 @@ def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (NULL hashes to a regular bucket), NOT a cartesian fallback —
     same single-shuffle shape at any scale."""
     orders = load_table(spark, sf_dir, "orders")
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("O", "open"), ("P", "pending"), (None, "finished")],
         "status_key string, status_name string",
     )
@@ -1380,13 +1381,14 @@ def q_order_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: exact_kth_cents(li, "cents", s[1]), stats
             )
         )
-    rows = [
+    # two rows: sorted here, so the result needs no sort job
+    rows = sorted(
         (name, k, v) for (name, k), v in zip(stats, vals)
-    ]
+    )
     li.unpersist()
-    return spark.createDataFrame(
-        rows, "stat_name string, k long, value_cents long"
-    ).orderBy("stat_name")
+    return local_frame(
+        spark, rows, "stat_name string, k long, value_cents long"
+    )
 
 
 # --- distributed statistics: sufficient-statistics regression -------------
@@ -1678,8 +1680,8 @@ def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmap = [0] * (BLOOM_M // 64)
     for r in word_rows:
         bitmap[r["word"]] = r["bits"]
-    bm = spark.createDataFrame(
-        [(bitmap,)], "bm: array<long>"
+    bm = local_frame(
+        spark, [(bitmap,)], "bm: array<long>"
     )  # 16384 longs → broadcast to every probe task
 
     li = load_table(spark, sf_dir, "lineitem").select(

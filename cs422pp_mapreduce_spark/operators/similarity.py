@@ -25,6 +25,8 @@ bounded 1-row query fetch and the K×dim centroid table.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve by name
 
@@ -32,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..session import scratch_persist
+from ..session import local_frame, scratch_persist
 from ..sources.catalog import load_table
 
 TOP_K = 10
@@ -333,12 +335,24 @@ def _sqdist_q(a: Column | str, b: Column | str) -> Column:
     )
 
 
+def _double_sql(x: float) -> str:
+    """SQL literal for one double. ``repr(float)`` is the shortest
+    round-trip decimal and Spark's parser reads the ``D`` literal with
+    Double.parseDouble — the identical IEEE bits ``F.lit(float(x))``
+    produces. NaN and ±inf have no numeric literal (``nanD`` does not
+    parse), so they go through a string cast, which Spark folds to the
+    same constant ``F.lit`` would give."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
 def _vec_sql(c: list[float]) -> str:
-    """SQL fragment for a literal double array. ``repr(float)`` is the
-    shortest round-trip decimal and Spark's parser reads the ``D``
-    literal with Double.parseDouble — the identical IEEE bits the old
-    per-element ``F.lit(float(x))`` produced."""
-    return "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")"
+    """SQL fragment for a literal double array (see ``_double_sql``)."""
+    return "array(" + ",".join(_double_sql(x) for x in c) + ")"
 
 
 def _lit_vec(c: list[float]) -> Column:
@@ -493,8 +507,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side work on already-collected index metadata), and the
     re-rank follows the proven topk_similarity cosine/ROUND-4
     convention; the DuckDB oracle replays fit → probe → re-rank."""
-    import math
-
     centroids, assigned = build_ivf_index(spark, sf_dir)
 
     qrow = assigned.where(F.col("vec_id") == QUERY_VEC_ID).select(
@@ -686,8 +698,8 @@ def semantic_keep_table(
     vecs = vecs.persist(
         StorageLevel.MEMORY_AND_DISK
     )  # scanned by the assignment and both sides of the pair join
-    cdf = spark.createDataFrame(
-        list(enumerate(centroids)), "cell int, cvec array<double>"
+    cdf = local_frame(
+        spark, list(enumerate(centroids)), "cell int, cvec array<double>"
     )
     assigned = (
         vecs.crossJoin(F.broadcast(cdf))
@@ -1062,8 +1074,6 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in SQL): each entry is Σ_pos floor((q−c)²·1e15) over the
     # subspace's PQ_DSUB dims — plain Python float ops, bit-identical
     # to the oracle's per-element FLOOR pipeline.
-    import math
-
     lut = [
         [
             sum(
@@ -1195,8 +1205,9 @@ def q_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean uses the quantized-mean convention — fully hash-verified
     against the unrolled Lloyd-fit oracle."""
     centroids, assigned = build_ivf_index(spark, sf_dir)
-    cdf = spark.createDataFrame(
-        [(c, v) for c, v in enumerate(centroids)],
+    cdf = local_frame(
+        spark,
+        list(enumerate(centroids)),
         "ocell int, cvec array<double>",
     )
     d = assigned.crossJoin(F.broadcast(cdf)).select(
@@ -1381,9 +1392,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     den = sum(x * x for x in v)
     rayleigh = float(num) / float(den) if den else 0.0
     out = [(i, v[i], rayleigh) for i in range(dim)]
-    return spark.createDataFrame(
-        out, "pos int, v long, rayleigh double"
-    )
+    return local_frame(spark, out, "pos int, v long, rayleigh double")
 
 
 def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1414,8 +1423,6 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast literal table) — index METADATA, not data. One
     corpus×queries scored pass is shared by all five top-K branches
     (scratch-persisted; evicted via evict_scratch)."""
-    import math
-
     from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1521,7 +1528,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             key=lambda i: (dq(qmap[qid], centroids[i]), i),
         )[:IVF_NPROBE]
     ]
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell int")
+    probes = local_frame(spark, probe_rows, "query_id long, cell int")
     ivf_cand = (
         assigned.where(F.col("vec_id") >= KNN_Q)
         .join(F.broadcast(probes), "cell")
@@ -1548,8 +1555,8 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         for m in range(PQ_M)
         for c in range(PQ_K)
     ]
-    lut = spark.createDataFrame(
-        lut_rows, "query_id long, m int, code int, dq long"
+    lut = local_frame(
+        spark, lut_rows, "query_id long, m int, code int, dq long"
     )
     adc = (
         codes.where(F.col("vec_id") >= KNN_Q)

@@ -54,7 +54,7 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel as PySparkStorageLevel
 
 from ..functions.text import nonempty_tokens
-from ..session import default_parallelism, scratch_persist
+from ..session import default_parallelism, local_frame, scratch_persist
 from ..sources.catalog import load_table
 
 # Minimum repeated-substring length (tokens) for a position to count
@@ -361,7 +361,8 @@ def q_dedup_suffix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.size("t")), F.sum(F.size("t"))
     ).collect()[0]  # 1-row bounded
     if not maxlen:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "doc_id long, n_tokens long, lrs_len long, "
             "dup_tokens long, n_spans long",

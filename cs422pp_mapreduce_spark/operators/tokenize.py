@@ -23,7 +23,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import default_parallelism
+from ..session import default_parallelism, local_frame
 from ..sources.catalog import load_table
 
 BPE_COUNT_SCHEMA = "doc_id long, n_ws_tokens long, n_bpe_tokens long"
@@ -255,8 +255,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         vocab = vocab.select(fold.alias("sym"), "n").localCheckpoint()
 
-    return spark.createDataFrame(
-        merges, "merge_rank long, left string, right string, pair_count long"
+    return local_frame(
+        spark, merges, "merge_rank long, left string, right string, pair_count long"
     )
 
 

@@ -68,7 +68,6 @@ def order_stat_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s")
         )
         .select("s.*")
-        .orderBy("stat_name")
     )
 
 
@@ -85,15 +84,14 @@ def bloom_semi_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         BLOOM_M,
         _bloom_pos,
     )
+    from ..session import local_frame
     from ..sources.catalog import load_table
 
     orders = load_table(spark, sf_dir, "orders")
     sel = orders.where(F.col("o_orderpriority") == "1-URGENT").select(
         "o_orderkey"
     )
-    bm = spark.createDataFrame(
-        [([0] * (BLOOM_M // 64),)], "bm: array<long>"
-    )
+    bm = local_frame(spark, [([0] * (BLOOM_M // 64),)], "bm: array<long>")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag"
     )

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.numeric import exact_sum
-from ..session import stream_state_partitions
+from ..session import local_frame, stream_state_partitions
 from ..sources.catalog import TABLE_SCHEMAS, table_path
 
 
@@ -44,12 +44,13 @@ def stream_drain_conf(spark: SparkSession):
 
     Stateful streaming fixes its state-store instance count from this
     conf at the first batch and AQE never coalesces streaming stages,
-    so the batch default (one partition per core) makes EVERY stateful
-    stage of EVERY micro-batch run one task + one state-store commit
-    per core — pure fixed cost at contract-fixture state sizes (see
-    session.stream_state_partitions). Results are partition-count
-    independent by the engine's conventions (decimal-routed sums,
-    per-key sequential state), which the oracle gate re-verifies.
+    so a session's batch setting (Spark's default is 200) would make
+    EVERY stateful stage of EVERY micro-batch run that many tasks and
+    state-store commits, in waves — pure fixed cost at contract-fixture
+    state sizes (see session.stream_state_partitions). Results are
+    partition-count independent by the engine's conventions
+    (decimal-routed sums, per-key sequential state), which the oracle
+    gate re-verifies.
 
     The conf is session-scoped, so a drain temporarily narrows batch
     queries planned concurrently on OTHER threads — harmless for
@@ -676,7 +677,8 @@ def q_stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # filtered events fixture): the empty-batch skip then writes no
         # versions at all, where pre-r13 an empty v0 landed. Return the
         # same empty result with the output schema (ADVICE r13 #2).
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "win_start timestamp, event_type string, "
             "n_events long, sum_value double",

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 import numpy as np
@@ -98,10 +99,16 @@ def test_is_big_graph_threshold_scales_with_sample_denom():
         GR._BIG_GRAPH_LINEITEM_ROWS = orig
 
 
-def test_is_big_graph_missing_layout_warns_not_raises(capsys):
+def test_is_big_graph_missing_layout_warns_not_raises(caplog):
     """An unreadable layout falls back to default planning with a
-    visible warning, never a silent False (ADVICE r09)."""
+    logged warning, never a silent False (ADVICE r09)."""
     from cs422pp_mapreduce_spark.operators import graph as GR
 
-    assert GR._is_big_graph("/nonexistent/sfX") is False
-    assert "footer stats probe failed" in capsys.readouterr().err
+    with caplog.at_level(logging.WARNING, logger=GR.__name__):
+        assert GR._is_big_graph("/nonexistent/sfX") is False
+    assert [
+        r.levelno
+        for r in caplog.records
+        if r.name == GR.__name__
+        and "footer stats probe failed" in r.getMessage()
+    ] == [logging.WARNING]

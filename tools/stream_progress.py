@@ -81,7 +81,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     runs = {}
-    # engine default (SPARK_GRAFT_STREAM_PARTS or 8)
+    # engine default (SPARK_GRAFT_STREAM_PARTS or min(cores, 8))
     os.environ.pop("SPARK_GRAFT_STREAM_PARTS", None)
     runs["default_stream_parts"] = _drain_with_progress(
         spark, sf_dir, shape, "deflt"
